@@ -13,7 +13,8 @@ import graft.serve.ApiServer
 /** Drives the HTTP serving shim end-to-end over a real loopback
   * socket: all three reference endpoints (routes.py:9-141) at the
   * reference cardinalities 197/177/155, gzip negotiation at the
-  * 1000-byte GZipMiddleware minimum (main.py:21), the
+  * 1000-byte GZipMiddleware minimum (main.py:21) with `Vary` on
+  * compressed responses and stable memoized gzip bytes, the
   * poverty-endpoint empty-collection fallback (routes.py:95-97), CORS
   * allow-listing (main.py:11-18), and the 500 `{"detail": …}` error
   * shape (routes.py:53-55).
@@ -64,17 +65,31 @@ class ApiServerSpec extends SparkSpecBase {
   }
 
   test("gzip: large bodies compress for gzip-capable clients, small bodies never do") {
-    val gz = get("/api/food-gaps", "Accept-Encoding" -> "gzip")
-    assert(gz.headers().firstValue("Content-Encoding").toScala.contains("gzip"))
-    val body = gunzip(gz.body())
-    assert(featureCount(body) == 197L)
-    // identical payload to the identity-encoded response
-    assert(body == new String(get("/api/food-gaps").body(), UTF_8))
+    def vary(r: HttpResponse[Array[Byte]]) = r.headers().firstValue("Vary").toScala
+    Seq("food-gaps" -> 197L, "poverty-by-zip" -> 177L, "rent-by-zip" -> 155L).foreach {
+      case (route, n) =>
+        val p = s"/api/$route"
+        val plain = get(p)
+        val gz1 = get(p, "Accept-Encoding" -> "gzip")
+        val gz2 = get(p, "Accept-Encoding" -> "gzip")
+        assert(gz1.headers().firstValue("Content-Encoding").toScala.contains("gzip"), p)
+        val body = gunzip(gz1.body())
+        assert(featureCount(body) == n, p)
+        // identical payload to the identity-encoded response
+        assert(body == new String(plain.body(), UTF_8), p)
+        assert(java.util.Arrays.equals(gz1.body(), gz2.body()),
+          s"$p: repeated gzip responses must be byte-identical")
+        // Vary marks compressed responses only (GZipMiddleware)
+        assert(vary(gz1).contains("Accept-Encoding"), p)
+        assert(vary(gz2).contains("Accept-Encoding"), p)
+        assert(vary(plain).isEmpty, p)
+    }
     // the root health message is < 1000 B: served identity even to a
     // gzip-capable client (GZipMiddleware minimum_size semantics)
     val root = get("/", "Accept-Encoding" -> "gzip")
     assert(root.statusCode() == 200)
     assert(root.headers().firstValue("Content-Encoding").toScala.isEmpty)
+    assert(vary(root).isEmpty)
     assert(new String(root.body(), UTF_8).contains("message"))
   }
 
@@ -125,9 +140,11 @@ class ApiServerSpec extends SparkSpecBase {
     val empty = new ApiServer(spark, dir)
     empty.start()
     try {
-      def getOn(p: String) = client.send(
-        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${empty.port}$p"))
-          .GET().build(), HttpResponse.BodyHandlers.ofString())
+      def getOn(p: String, headers: (String, String)*) = {
+        val b = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${empty.port}$p"))
+        headers.foreach { case (k, v) => b.header(k, v) }
+        client.send(b.GET().build(), HttpResponse.BodyHandlers.ofString())
+      }
       // json_agg's NULL nests INSIDE json_build_object, so zero rows
       // produce features:null — never literal null, never [] (the
       // poverty `if not result` fallback never fires: the dict is
@@ -137,6 +154,11 @@ class ApiServerSpec extends SparkSpecBase {
         assert(r.statusCode() == 200, p)
         assert(r.body() == """{"type":"FeatureCollection","features":null}""",
           s"$p must serve json_build_object's features:null shape")
+        // the body is under the gzip minimum: identity, no Vary
+        val gz = getOn(p, "Accept-Encoding" -> "gzip")
+        assert(gz.body() == r.body(), p)
+        assert(gz.headers().firstValue("Content-Encoding").toScala.isEmpty, p)
+        assert(gz.headers().firstValue("Vary").toScala.isEmpty, p)
       }
     } finally empty.stop()
   }
@@ -152,6 +174,16 @@ class ApiServerSpec extends SparkSpecBase {
           .GET().build(), HttpResponse.BodyHandlers.ofString())
       assert(r.statusCode() == 500)
       assert(r.body().startsWith("""{"detail":""""))
+      // a failed render is never memoized: once the tables land, the
+      // same server renders the route
+      Seq("census_zctas_2020", "zillow_zori").foreach { t =>
+        spark.read.parquet(s"$warehouse/$t").write.parquet(s"$dir/$t")
+      }
+      val fixed = client.send(
+        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${broken.port}/api/rent-by-zip"))
+          .GET().build(), HttpResponse.BodyHandlers.ofString())
+      assert(fixed.statusCode() == 200)
+      assert(featureCount(fixed.body()) == 155L)
     } finally broken.stop()
   }
 

@@ -68,4 +68,19 @@ class BenchMetricLineSpec extends AnyFunSuite {
     assert(node.get("queries").size() > 0,
       "the queries map must keep at least the slowest entries")
   }
+
+  test("paths longer than the tail window still fit: the compact line carries basenames") {
+    val deep = "/data" + "/nested_benchmark_directory" * 80
+    assert(deep.length > 2000)
+    val qs = syntheticQueries(3)
+    val line = Bench.stdoutLine(fullLine(qs).replace("/root/testdata/sf0.1", s"$deep/sf0.1"),
+      qs.map(_._2).sum, qs, Nil, Nil, s"$deep/bench_out.json", s"$deep/sf0.1", None)
+    assert(line.length <= Bench.stdoutBudget,
+      s"metric line ${line.length} chars exceeds the ${Bench.stdoutBudget} tail budget")
+    assert(!line.contains("\n"))
+    val node = mapper.readTree(line)
+    assert(node.get("queries_full").asText() == "bench_out.json")
+    assert(node.get("sf").asText() == "sf0.1")
+    assert(node.get("queries").size() == 3)
+  }
 }

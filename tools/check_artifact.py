@@ -12,7 +12,11 @@ tooling read.
 Usage: python3 tools/check_artifact.py BENCH_file.json [more...]
 Exit 0 iff every file parses as the bench JSON object with a numeric
 `value`, the `queries` per-query map, `n_queries` consistent with it,
-and an empty-or-listed `failed`.
+and an empty-or-listed `failed`. A full-catalog artifact (the complete
+line Bench writes to its output file, not a subset run and not the
+compact stdout line) must also carry the `head_cold` map of the cold
+main-pass times of exactly the head queries Bench re-times, so a pin
+from before the head re-time cannot be compared with one after it.
 """
 import json
 import sys
@@ -52,6 +56,28 @@ def catalog_size():
             return len(json.load(f))
     except (OSError, json.JSONDecodeError):
         return None
+
+
+def check_head_cold(head_cold, queries: dict) -> list:
+    """Bench re-times the alphabetical head of a full catalog (every
+    name sorting before the first `q_*` one) and keeps the cold times
+    under `head_cold`; a full-catalog artifact without that map, or with
+    a map over other names, mixes the two methodologies."""
+    if head_cold is None:
+        return ["full-catalog artifact lacks the `head_cold` map "
+                "(a pin from before the head re-time)"]
+    if not isinstance(head_cold, dict) or not all(
+            isinstance(v, (int, float)) for v in head_cold.values()):
+        return ["`head_cold` is not a map of numeric timings"]
+    heads = set()
+    for name in sorted(queries):
+        if name.startswith("q_"):
+            break
+        heads.add(name)
+    if set(head_cold) != heads:
+        return [f"`head_cold` keys differ from the head queries: "
+                f"{sorted(set(head_cold) ^ heads)[:5]}"]
+    return []
 
 
 def check(path: str) -> list:
@@ -110,6 +136,9 @@ def check(path: str) -> list:
             if cat and n > cat + 16:
                 errs.append(f"n_queries={n} exceeds the known catalog "
                             f"size ({cat}) — over-reported artifact")
+    if isinstance(q, dict) and q and "queries_full" not in obj \
+            and "subset" not in obj:
+        errs += check_head_cold(obj.get("head_cold"), q)
     failed = obj.get("failed")
     if failed is None or not isinstance(failed, list):
         errs.append("missing `failed` list")

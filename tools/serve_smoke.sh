@@ -7,10 +7,12 @@
 # ACTUAL operator path: `Test/runMain graft.ServeSmokeGen` builds the
 # ingest-chain warehouse + ExportJob batch export, then the real
 # `graft.jobs.Main serve` CLI boots on an ephemeral port and every
-# endpoint body (identity AND gzip) is byte-compared to the batch files.
+# endpoint body (identity AND gzip) is byte-compared to the batch files,
+# and two gzip responses per endpoint must be byte-identical and carry
+# `Vary: Accept-Encoding`.
 # Catches CLI-wiring or body-memo drift the unit spec cannot.
 #
-# Expect: three "ok:" lines, exit 0.
+# Expect: six "ok:" lines, exit 0.
 set -e
 cd "$(dirname "$0")/.."
 OUT=${1:-/tmp/graft_serve_smoke}
@@ -20,11 +22,12 @@ sbt -batch "Test/runMain graft.ServeSmokeGen $OUT" >"$OUT/gen.log" 2>&1 ||
   { echo "ServeSmokeGen failed:"; tail -20 "$OUT/gen.log"; exit 1; }
 WH=$(cat "$OUT/warehouse_dir")
 
-sbt -batch "runMain graft.jobs.Main serve $WH 0" >"$OUT/serve.log" 2>&1 &
+# own process group: the sbt JVM runs as `java @argsfile`, so neither
+# killing the launcher nor matching its command line would stop it
+setsid sbt -batch "runMain graft.jobs.Main serve $WH 0" >"$OUT/serve.log" 2>&1 &
 SBT_PID=$!
 cleanup() {
-  kill "$SBT_PID" 2>/dev/null || true
-  pkill -f 'graft.jobs.Main serve' 2>/dev/null || true
+  kill -- -"$SBT_PID" 2>/dev/null || true
 }
 trap cleanup EXIT
 
@@ -41,12 +44,23 @@ fail=0
 check() { # endpoint exportfile
   ep=$1; f="$OUT/export/$2"
   curl -sf "http://127.0.0.1:$PORT/api/$ep" -o "$OUT/$ep.plain"
-  curl -sf -H 'Accept-Encoding: gzip' "http://127.0.0.1:$PORT/api/$ep" \
-    | gunzip >"$OUT/$ep.gunzipped"
+  # two gzip GETs: the memoized encoding must come back byte-identical,
+  # marked Vary: Accept-Encoding
+  for n in 1 2; do
+    curl -sf -H 'Accept-Encoding: gzip' -D "$OUT/$ep.gz$n.headers" \
+      "http://127.0.0.1:$PORT/api/$ep" -o "$OUT/$ep.gz$n"
+  done
+  gunzip <"$OUT/$ep.gz1" >"$OUT/$ep.gunzipped"
   ok=1
   cmp -s "$OUT/$ep.plain" "$f" || { echo "MISMATCH /api/$ep (identity) vs $2"; ok=0; }
   cmp -s "$OUT/$ep.gunzipped" "$f" || { echo "MISMATCH /api/$ep (gzip) vs $2"; ok=0; }
-  [ $ok = 1 ] && echo "ok: /api/$ep == $2 ($(wc -c <"$f") bytes, identity+gzip)" || fail=1
+  cmp -s "$OUT/$ep.gz1" "$OUT/$ep.gz2" ||
+    { echo "MISMATCH /api/$ep: two gzip responses differ"; ok=0; }
+  for n in 1 2; do
+    grep -qi '^Vary: Accept-Encoding' "$OUT/$ep.gz$n.headers" ||
+      { echo "MISSING Vary: Accept-Encoding on /api/$ep gzip response $n"; ok=0; }
+  done
+  [ $ok = 1 ] && echo "ok: /api/$ep == $2 ($(wc -c <"$f") bytes, identity+gzip x2, Vary)" || fail=1
 }
 check food-gaps food_gaps.json
 check poverty-by-zip poverty_by_zip.json
