@@ -208,18 +208,7 @@ object Bench {
           s"[bench] NO SF-MATCHED BASELINE: ${present.mkString(", ")} exist " +
             s"but none matches sf=$sfNorm — regression tracking disabled " +
             "for this run")
-      chosen match {
-        case None => Map.empty
-        case Some(txt) =>
-          // scope the scrape to the "queries" object: pinned artifacts
-          // also carry an "adjudicated" map whose entries would
-          // otherwise override (last-wins) that query's real baseline
-          val scope = """(?s)"queries"\s*:\s*\{([^}]*)\}""".r
-            .findFirstMatchIn(txt).map(_.group(1)).getOrElse(txt)
-          val entry = """"([^"]+)"\s*:\s*([0-9.]+)""".r
-          entry.findAllMatchIn(scope)
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
+      chosen.fold(Map.empty[String, Double])(baselineTimes(_, only.isDefined))
     }
     def trips(name: String, t: Double): Boolean =
       baseline.get(name).exists(b => t > 2 * b && t - b > 0.5)
@@ -311,6 +300,27 @@ object Bench {
       reported.map { case (k, v, _) => (k, v) },
       (mainFailed ++ adjFailed).distinct.sorted, regressions, out,
       sfDir, only.map(_.size)))
+  }
+
+  /** Per-query baseline times scraped from a pinned artifact's text.
+    * The scrape is scoped to the "queries" object: pinned artifacts also
+    * carry an "adjudicated" map whose entries would otherwise override
+    * (last-wins) that query's real baseline. A subset run times the
+    * TPC-H head in a single pass with no end-of-run re-time, so it is
+    * measured cold; its head queries take the pin's "head_cold" entry
+    * where there is one, since the pin's "queries" time for them is the
+    * warm min(cold, warm) and would trip the 2x gate spuriously.
+    * Full-catalog runs compare against "queries" throughout.
+    */
+  private[graft] def baselineTimes(txt: String, subset: Boolean): Map[String, Double] = {
+    def scope(field: String): Option[String] =
+      s"""(?s)"$field"\\s*:\\s*\\{([^}]*)\\}""".r.findFirstMatchIn(txt).map(_.group(1))
+    def entries(s: String): Map[String, Double] =
+      """"([^"]+)"\s*:\s*([0-9.]+)""".r.findAllMatchIn(s)
+        .map(m => m.group(1) -> m.group(2).toDouble).toMap
+    val queries = entries(scope("queries").getOrElse(txt))
+    if (subset) queries ++ scope("head_cold").map(entries).getOrElse(Map.empty)
+    else queries
   }
 
   /** Driver tail-window budget: the driver captures only the LAST ~2000

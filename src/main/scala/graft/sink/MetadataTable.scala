@@ -1,12 +1,16 @@
 package graft.sink
 
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 
 /** K5 — per-dataset ingestion bookkeeping (storage.py:299-334): one row
-  * per dataset_id holding last ingestion time, record count, status —
-  * upserted on dataset_id via the latest-wins Parquet strategy.
+  * per dataset_id holding last ingestion time, record count, status.
+  * The table holds one row per dataset (five in the reference), so an
+  * update collects it on the driver, replaces the dataset's row and
+  * rewrites it as one file through the upsert sink's write-then-swap —
+  * no shuffle, no cache.
   */
 object MetadataTable {
 
@@ -27,9 +31,14 @@ object MetadataTable {
       status: String = "success",
       now: Timestamp = new Timestamp(System.currentTimeMillis())): Unit = {
     import spark.implicits._
-    val entry = Seq(
-      MetadataEntry(datasetId, tableName, now, recordCount, status)).toDF()
-    UpsertSink.upsertParquet(spark, dir, entry, keys = Seq("dataset_id"))
+    val schema = Encoders.product[MetadataEntry].schema
+    val kept =
+      if (Files.exists(Paths.get(dir)))
+        spark.read.schema(schema).parquet(dir).as[MetadataEntry].collect()
+          .filterNot(_.dataset_id == datasetId).toSeq
+      else Nil
+    val entry = MetadataEntry(datasetId, tableName, now, recordCount, status)
+    UpsertSink.writeAtomic((kept :+ entry).toDF().coalesce(1), Paths.get(dir))
   }
 
   def read(spark: SparkSession, dir: String): DataFrame =

@@ -23,7 +23,10 @@ import graft.transform.Ops
   *      only key columns exist), for use with a real JDBC sink.
   *
   * Scale notes: (a) rewrites the table — correct for the reference's
-  * dimension-sized tables (hundreds to thousands of rows); at 100 TB
+  * dimension-sized tables (hundreds to thousands of rows). The merged
+  * frame streams straight into the temp dir in one write job; readers
+  * are protected by the temp-dir isolation and the swap, so nothing is
+  * cached or counted first. At 100 TB
   * the same latest-wins plan applies per partition (the union +
   * window shuffles once on the unique keys) and you'd overwrite only
   * affected partitions (partitionBy on the key prefix) or use a
@@ -64,27 +67,29 @@ object UpsertSink {
     writeAtomic(merged, target, partitionBy)
   }
 
-  /** Write-new-then-swap (§7.5.4): materialize to a sibling temp dir,
+  /** Write-new-then-swap (§7.5.4): write `df` into a sibling temp dir,
     * then swap directories so readers never observe a half-written
-    * table. (Two renames — not a transaction, but the window is a
-    * metadata op, not a data write.)
+    * table. The temp dir is what protects readers, not materialization:
+    * no reader can see it, and the target stays untouched until the
+    * write job has committed, so a `df` that reads the target itself (a
+    * refresh) sees the old rows throughout. A failed write deletes the
+    * temp dir and rethrows, leaving the target as it was. (Two renames
+    * — not a transaction, but the window is a metadata op, not a data
+    * write.)
     */
-  private def writeAtomic(df: DataFrame, target: Path,
-                          partitionBy: Seq[String] = Nil): Unit = {
+  private[graft] def writeAtomic(df: DataFrame, target: Path,
+                                 partitionBy: Seq[String] = Nil): Unit = {
     val tmp = target.resolveSibling(s"${target.getFileName}.tmp-${UUID.randomUUID()}")
-    // materialize fully before touching the target (the source may read
-    // the target itself)
-    df.cache().count()
     try {
       val writer = df.write.mode("overwrite")
       (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
         .parquet(tmp.toString)
-      val old = target.resolveSibling(s"${target.getFileName}.old-${UUID.randomUUID()}")
-      val existed = Files.exists(target)
-      if (existed) Files.move(target, old)
-      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-      if (existed) deleteRecursively(old)
-    } finally df.unpersist()
+    } catch { case t: Throwable => deleteRecursively(tmp); throw t }
+    val old = target.resolveSibling(s"${target.getFileName}.old-${UUID.randomUUID()}")
+    val existed = Files.exists(target)
+    if (existed) Files.move(target, old)
+    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+    if (existed) deleteRecursively(old)
   }
 
   private def deleteRecursively(p: Path): Unit = FsUtil.deleteRecursively(p)

@@ -40,10 +40,11 @@ object Tables {
     * Memory bounds (r15, the r14 ADVICE items): the memo keys on
     * (session, path) with the signature stored in the VALUE, so a
     * superseded signature is evicted by the insert that replaces it, and
-    * entries whose session has been stopped (the 140-suite test JVM,
-    * newSession A/B probes) are swept on every load — driver memory is
-    * bounded by live sessions x live tables instead of growing for the
-    * JVM lifetime.
+    * entries whose SparkContext has been stopped (the 140-suite test JVM)
+    * are swept on every load. Sessions made with `newSession()` share
+    * their parent's SparkContext, so their entries are reclaimed only
+    * when that context stops: driver memory is bounded by the sessions
+    * created on a live context x live tables, not by live sessions.
     */
   private val relationMemo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, DataFrame)]()
@@ -81,8 +82,11 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (!memoEnabled) spark.read.parquet(s"$sfDir/$name.parquet")
     else {
-      // sweep entries owned by stopped sessions (tiny map: sessions x
-      // tables, so a full pass per load is cheaper than any bookkeeping)
+      // sweep entries whose SparkContext has stopped (tiny map: sessions
+      // x tables, so a full pass per load is cheaper than any
+      // bookkeeping). A newSession() child shares its parent's context,
+      // so its entries stay until that context stops, not until the
+      // child is dropped.
       relationMemo.keySet.removeIf(k => k._1.sparkContext.isStopped)
       val path = s"$sfDir/$name.parquet"
       val sig = contentSignature(java.nio.file.Paths.get(path))

@@ -1,6 +1,6 @@
 package graft.validate
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.catalog.DatasetSpec
@@ -27,10 +27,13 @@ object Validator {
   /** Validate a frame against its DatasetSpec.
     *
     * Scale shape: required-column presence is schema-only (no job);
-    * row count + every range rule run in ONE aggregation pass
-    * (map-side combinable conditional sums); the duplicate check is a
-    * single groupBy on the unique keys. Two jobs total regardless of
-    * how many rules the spec declares.
+    * row count, every range rule and the duplicate check run in ONE
+    * query regardless of how many rules the spec declares. Without a
+    * duplicate check that is a single global aggregation of map-side
+    * combinable conditional sums. With one, the same sums are taken per
+    * unique-key group alongside the group size, and a global fold adds
+    * them up, counting the rows of groups larger than one. Sums over no
+    * rows read 0, so an empty frame reports no violations.
     */
   def validate(df: DataFrame, spec: DatasetSpec): ValidationReport = {
     val present = df.columns.toSet
@@ -38,35 +41,32 @@ object Validator {
 
     val ranged = spec.columns.filter(c =>
       present.contains(c.name) && (c.min.isDefined || c.max.isDefined))
-    val aggs =
-      count(lit(1)).as("__n") +:
-        ranged.flatMap { c =>
-          Seq(
-            sum(when(c.min.map(m => col(c.name) < m).getOrElse(lit(false)), 1)
-              .otherwise(0)).as(s"${c.name}__below"),
-            sum(when(c.max.map(m => col(c.name) > m).getOrElse(lit(false)), 1)
-              .otherwise(0)).as(s"${c.name}__above"))
-        }
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    val rowCount = row.getLong(0)
+    def total(e: Column): Column = coalesce(sum(e), lit(0L))
+    // two sums per rule: rows below min, rows above max
+    val ruleSums = ranged.flatMap { c =>
+      Seq(c.min.map(m => col(c.name) < m), c.max.map(m => col(c.name) > m))
+        .map(cond => total(when(cond.getOrElse(lit(false)), 1).otherwise(0)))
+    }
+    val keys = spec.validation.uniqueKeys
+    val checkDups = !spec.validation.allowDuplicates && keys.nonEmpty &&
+      keys.forall(present.contains)
+    val (input, aggs) =
+      if (!checkDups) (df, count(lit(1)) +: ruleSums :+ lit(0L))
+      else {
+        // rows participating in any duplicate group (pandas
+        // duplicated(keep=False).sum() semantics, parser.py:107-113;
+        // NULL keys form one group)
+        val partial = count(lit(1)).as("__c") +:
+          ruleSums.zipWithIndex.map { case (s, i) => s.as(s"__r$i") }
+        (df.groupBy(keys.map(col).toIndexedSeq: _*).agg(partial.head, partial.tail: _*),
+          total(col("__c")) +: ruleSums.indices.map(i => total(col(s"__r$i"))) :+
+            total(when(col("__c") > 1, col("__c"))))
+      }
+    val row = input.agg(aggs.head, aggs.tail: _*).head()
     val violations = ranged.zipWithIndex.map { case (c, i) =>
       RangeViolation(c.name, row.getLong(1 + i * 2), row.getLong(2 + i * 2))
     }.filter(v => v.belowMin > 0 || v.aboveMax > 0)
 
-    val dupRows =
-      if (spec.validation.allowDuplicates || spec.validation.uniqueKeys.isEmpty ||
-        !spec.validation.uniqueKeys.forall(present.contains)) 0L
-      else {
-        // rows participating in any duplicate group (pandas
-        // duplicated(keep=False).sum() semantics, parser.py:107-113)
-        val r = df.groupBy(spec.validation.uniqueKeys.map(col).toIndexedSeq: _*)
-          .agg(count(lit(1)).as("__c"))
-          .filter(col("__c") > 1)
-          .agg(coalesce(sum(col("__c")), lit(0L)).as("dups"))
-          .head()
-        r.getLong(0)
-      }
-
-    ValidationReport(rowCount, missing, violations, dupRows)
+    ValidationReport(row.getLong(0), missing, violations, row.getLong(aggs.size - 1))
   }
 }

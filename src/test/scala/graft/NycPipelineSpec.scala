@@ -136,4 +136,26 @@ class NycPipelineSpec extends SparkSpecBase {
     val z0 = after.filter(col("zip_code") === zips.head).head
     assert(z0.getAs[Double]("median_household_income") == 60000.0)
   }
+
+  test("a refresh ingest validates in one query, caches nothing, keeps metadata in one file") {
+    val metaDir = s"$warehouse/dataset_metadata"
+    spark.catalog.clearCache()
+    val acsAgain = zips.zipWithIndex.map { case (z, i) =>
+      (z, s"${70000 + i}", s"${5 + i % 50}", s"${100 + i}")
+    }.toDF("zip code tabulation area", "B19013_001E", "B17020_002E", "B17020_001E")
+    val (res, sites) = SqlExecutions.callSites(spark)(
+      IngestJob.run(spark, Registry.censusAcs, acsAgain, Transformers.censusAcs(), warehouse))
+    assert(SqlExecutions.from(sites, "graft.validate.Validator").size == 1)
+    assert(res.recordCount == nZips)
+    assert(spark.sharedState.cacheManager.isEmpty, "ingest left a cached frame behind")
+    val meta = spark.read.parquet(metaDir)
+    assert(meta.count() == 5)
+    assert(meta.select("dataset_id").distinct().count() == 5)
+    assert(meta.filter(col("dataset_id") === Registry.censusAcs.datasetId)
+      .head.getAs[Long]("record_count") == nZips)
+    val parts = Files.list(Paths.get(metaDir)).iterator()
+    val files = scala.jdk.CollectionConverters.IteratorHasAsScala(parts).asScala
+      .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toList
+    assert(files.size == 1, files)
+  }
 }

@@ -1,7 +1,9 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
@@ -9,8 +11,8 @@ import graft.sink.{MetadataTable, UpsertSink}
 
 /** K2 strategy (a) latest-wins parquet upsert: fresh write, update-on-
   * conflict, insert-on-new-key, idempotence, schema evolution, atomic
-  * visibility — plus golden ON CONFLICT SQL generation (strategy b) and
-  * the K5 metadata table.
+  * visibility, a write that fails before the swap — plus golden ON
+  * CONFLICT SQL generation (strategy b) and the K5 metadata table.
   */
 class UpsertSinkSpec extends SparkSpecBase {
   import spark.implicits._
@@ -100,5 +102,45 @@ class UpsertSinkSpec extends SparkSpecBase {
     assert(rows("4kc9-zrs2")._1 == 120)
     assert(rows("4kc9-zrs2")._2 == Timestamp.valueOf("2026-02-01 00:00:00"))
     assert(rows("zillow_zori")._1 == 155)
+  }
+
+  private def siblings(dir: String): List[String] = {
+    val target = Paths.get(dir)
+    val name = target.getFileName.toString
+    val stream = Files.list(target.getParent)
+    try stream.iterator().asScala.map(_.getFileName.toString)
+      .filter(n => n.startsWith(s"$name.tmp-") || n.startsWith(s"$name.old-")).toList
+    finally stream.close()
+  }
+
+  private def assertRaised(e: Throwable): Unit =
+    assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains("boom"))), e)
+
+  // a non-local source, so the error is raised by a task rather than
+  // folded away at planning time
+  private def failing = spark.range(3).select(
+    concat(lit("z"), col("id").cast("string")).as("zip_code"),
+    raise_error(lit("boom")).cast("double").as("rent_index"))
+
+  test("an upsert whose incoming frame fails keeps the old table and leaves no sibling dirs") {
+    val dir = freshDir()
+    UpsertSink.upsertParquet(spark, dir,
+      Seq(("a", 1.0), ("b", 2.0)).toDF("zip_code", "rent_index"), Seq("zip_code"))
+    assertRaised(intercept[Exception](
+      UpsertSink.upsertParquet(spark, dir, failing, Seq("zip_code"))))
+    assert(readMap(dir) == Map("a" -> 1.0, "b" -> 2.0))
+    assert(siblings(dir).isEmpty, siblings(dir))
+  }
+
+  test("a write that fails inside the temp dir deletes it and rethrows") {
+    // no exchange before the write, so the failing task is a write task
+    // and the temp dir already exists when it fails
+    val dir = freshDir()
+    UpsertSink.upsertParquet(spark, dir,
+      Seq(("a", 1.0)).toDF("zip_code", "rent_index"), Seq("zip_code"))
+    assertRaised(intercept[Exception](UpsertSink.writeAtomic(failing, Paths.get(dir))))
+    assert(readMap(dir) == Map("a" -> 1.0))
+    assert(siblings(dir).isEmpty, siblings(dir))
   }
 }

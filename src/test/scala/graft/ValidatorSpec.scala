@@ -22,7 +22,8 @@ class ValidatorSpec extends SparkSpecBase {
     val df = Seq(
       ("a", -5.0), ("a", 50.0), ("b", 101.0), ("c", 200.0), ("d", 30.0)
     ).toDF("k", "pct")
-    val r = Validator.validate(df, spec)
+    val (r, sites) = SqlExecutions.callSites(spark)(Validator.validate(df, spec))
+    assert(sites.size == 1, "ranges and duplicates come from one SQL execution")
     assert(r.rowCount == 5)
     assert(r.missingRequired == Seq("absent_required"))
     val v = r.rangeViolations.head
@@ -54,5 +55,25 @@ class ValidatorSpec extends SparkSpecBase {
     val r = Validator.validate(df, clean)
     assert(r.rangeViolations.head.belowMin == 1)
     assert(r.rangeViolations.head.aboveMax == 0)
+  }
+
+  private val clean = spec.copy(columns = spec.columns.filterNot(_.name == "absent_required"))
+
+  test("empty frame: zero rows, no violations, no duplicates (with and without the key check)") {
+    val empty = Seq.empty[(String, Double)].toDF("k", "pct")
+    val lax = clean.copy(validation = ValidationRules(allowDuplicates = true, uniqueKeys = Seq("k")))
+    Seq(clean, lax).foreach { s =>
+      val r = Validator.validate(empty, s)
+      assert(r.rowCount == 0 && r.rangeViolations.isEmpty && r.duplicateKeyRows == 0)
+      assert(r.ok)
+    }
+  }
+
+  test("NULL keys count as one duplicate group") {
+    val df = Seq[(Option[String], Double)](
+      (None, 1.0), (None, 2.0), (Some("a"), 3.0)).toDF("k", "pct")
+    val r = Validator.validate(df, clean)
+    assert(r.rowCount == 3)
+    assert(r.duplicateKeyRows == 2)
   }
 }
